@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core._
-import graft.functions.GeoExprs
+import graft.functions.{GeoExprs, GeoKernels}
 
 /**
  * Spark-native spatial engine: the reference's prepare/partition/index/query
@@ -125,28 +125,11 @@ object GeoEngine {
     * Pure Catalyst expressions (sequence/transform/flatten) — no UDF, the
     * cover generation stays inside whole-stage codegen. */
   def withTiles2(df: DataFrame, grid: GridConfig): DataFrame =
-    explodeCover(df, grid.fineExtX, grid.fineExtY, grid.xMin, grid.yMin,
-      grid.globalPpd)
+    df.withColumn("tile", explode(lvlCoverArr(grid, fine = true)))
 
   private[graft] def clampIdx(c: Column, ext: Double, lo: Double, ppd: Int): Column =
     least(greatest(floor((c - lit(lo)) / lit(ext)).cast("long"), lit(0L)),
       lit(ppd - 1L))
-
-  /** Explode by the MBR's cell cover at an arbitrary granularity (fine or
-    * coarse grid); points take the single-cell fast path. */
-  private def explodeCover(df: DataFrame, extX: Double, extY: Double,
-                           lox: Double, loy: Double, ppd: Int): DataFrame = {
-    val iMin = clampIdx(col("xmin"), extX, lox, ppd)
-    val iMax = clampIdx(col("xmax"), extX, lox, ppd)
-    val jMin = clampIdx(col("ymin"), extY, loy, ppd)
-    val jMax = clampIdx(col("ymax"), extY, loy, ppd)
-    val p = lit(ppd.toLong)
-    val cover = flatten(transform(sequence(jMin, jMax),
-      j => transform(sequence(iMin, iMax), i => i + j * p)))
-    val single = array(iMin + jMin * p)
-    df.withColumn("tile",
-      explode(when(col("gtype") === GeomType.POINT, single).otherwise(cover)))
-  }
 
   /** Fine-grid cell count of the row's MBR cover (pre-explode). */
   private def fineCoverCnt(grid: GridConfig): Column = {
@@ -216,10 +199,10 @@ object GeoEngine {
       // division, and the per-coarse-cell count is a sum over its ≤ fpc²
       // fine tiles. Costs one extra two-stage agg over the ≤ ppd²-row
       // partial — NOT a second pass over the data. This is the density
-      // statistic for the COARSE sub-joins: a pile-up of wide objects in
+      // statistic for the COARSE tile keys: a pile-up of wide objects in
       // one coarse cell takes the O(k²) hash filter unless detected here
-      // (the fine histogram cannot see it — wide objects never enter the
-      // fine join). Non-nested custom grids keep the pre-round-4 behavior:
+      // (the fine histogram cannot see it — wide objects never emit fine
+      // tiles). Non-nested custom grids keep the pre-round-4 behavior:
       // maxCoarseCellCnt = 0 (coarse auto-sweep never engages; the explicit
       // sweep flag still works) — a conservative fallback, never an error.
       // (Non-nested grids also fold out-of-range coarse indices onto other
@@ -251,7 +234,8 @@ object GeoEngine {
     }
   }
 
-  /** One side's exploded row for the in-tile plane sweep. */
+  /** One side's exploded row for the in-tile plane sweep: the merged
+    * exchange's emission (`mrEmission`) under positional names. */
   final case class SweepRow(tile: Long, id: Long, g: Int,
       xmin: Double, ymin: Double, xmax: Double, ymax: Double)
 
@@ -268,35 +252,44 @@ object GeoEngine {
    * and only the x-overlap is tested — O((m+n)·log + scanned) instead of the
    * m×n cross product a hash join feeds to the filter. Exactly-once within
    * the tile via the ymin tie-break (r-scan takes s.ymin ≥ r.ymin, s-scan
-   * takes r.ymin > s.ymin); exactly-once across tiles via the same
-   * reference-point filter as the hash path.
+   * takes r.ymin > s.ymin).
+   *
+   * `tile` is the merged exchange's level-tagged key, so the level is read
+   * off the key (coarse iff ≥ LvlOffset) and the pair rules are the hash
+   * path's own kernels (`mergedJoin`): reference-point dedup at the key's
+   * level (`GeoKernels.refCellDedup`) and, at coarse keys, the both-narrow
+   * level filter (`GeoKernels.fineCoverCnt > maxFineCover` — two narrow
+   * objects already met at fine).
    *
    * Use for DENSE tiles: the hash-join path is fully codegen'd and wins on
    * ordinary density, but a tile holding k objects costs it O(k²) filter
    * evaluations — the sweep caps hot-tile cost without salting.
    */
-  private def sweepTile(grid: GridConfig, tile: Long,
-      rsIn: Iterator[SweepRow], ssIn: Iterator[SweepRow],
-      fine: Boolean = true): Iterator[CandRow] = {
+  private def sweepTile(grid: GridConfig, maxFineCover: Int, tile: Long,
+      rsIn: Iterator[SweepRow], ssIn: Iterator[SweepRow]): Iterator[CandRow] = {
     val rs = rsIn.toArray
     val ss = ssIn.toArray
     if (rs.isEmpty || ss.isEmpty) return Iterator.empty
     java.util.Arrays.sort(rs, Ordering.by((w: SweepRow) => w.ymin))
     java.util.Arrays.sort(ss, Ordering.by((w: SweepRow) => w.ymin))
     val out = scala.collection.mutable.ArrayBuffer.empty[CandRow]
-    // reference-point dedup at THIS sweep's granularity (fine tiles for the
-    // narrow×narrow join, coarse cells for the wide sub-joins) — same rule
-    // the hash path applies per sub-join
-    val ppd = if (fine) grid.globalPpd else grid.coarsePpd
-    @inline def cellX(x: Double): Int = if (fine) grid.fineX(x) else grid.coarseX(x)
-    @inline def cellY(y: Double): Int = if (fine) grid.fineY(y) else grid.coarseY(y)
-    @inline def emit(r: SweepRow, s: SweepRow): Unit =
+    val coarse = tile >= LvlOffset
+    // per-row wide flags, evaluated once per row instead of once per pair
+    def wideFlags(ws: Array[SweepRow]): Array[Boolean] = ws.map(w => coarse &&
+      GeoKernels.fineCoverCnt(w.xmin, w.ymin, w.xmax, w.ymax, grid.xMin,
+        grid.yMin, grid.fineExtX, grid.fineExtY, grid.globalPpd) > maxFineCover)
+    val rWide = wideFlags(rs)
+    val sWide = wideFlags(ss)
+    @inline def emit(i: Int, j: Int): Unit = {
+      val r = rs(i); val s = ss(j)
       if (r.xmax >= s.xmin && r.xmin <= s.xmax &&
-          math.min(math.max(cellX(math.max(r.xmin, s.xmin)), 0), ppd - 1).toLong +
-          math.min(math.max(cellY(math.max(r.ymin, s.ymin)), 0), ppd - 1).toLong * ppd
-            == tile)
+          (!coarse || rWide(i) || sWide(j)) &&
+          GeoKernels.refCellDedup(tile, r.xmin, r.ymin, s.xmin, s.ymin,
+            grid.xMin, grid.yMin, grid.fineExtX, grid.fineExtY, grid.globalPpd,
+            grid.coarseExtX, grid.coarseExtY, grid.coarsePpd, LvlOffset))
         out += CandRow(r.id, s.id, r.g, s.g,
           r.xmin, r.ymin, r.xmax, r.ymax, s.xmin, s.ymin, s.xmax, s.ymax)
+    }
     // pointer into ss of the first element with ymin >= current r.ymin
     var j0 = 0
     var i = 0
@@ -304,7 +297,7 @@ object GeoEngine {
       val r = rs(i)
       while (j0 < ss.length && ss(j0).ymin < r.ymin) j0 += 1
       var j = j0
-      while (j < ss.length && ss(j).ymin <= r.ymax) { emit(r, ss(j)); j += 1 }
+      while (j < ss.length && ss(j).ymin <= r.ymax) { emit(i, j); j += 1 }
       i += 1
     }
     // symmetric pass for pairs where r.ymin > s.ymin (strict — no double emit)
@@ -314,7 +307,7 @@ object GeoEngine {
       val s = ss(k)
       while (i0 < rs.length && rs(i0).ymin <= s.ymin) i0 += 1
       var i2 = i0
-      while (i2 < rs.length && rs(i2).ymin <= s.ymax) { emit(rs(i2), s); i2 += 1 }
+      while (i2 < rs.length && rs(i2).ymin <= s.ymax) { emit(i2, k); i2 += 1 }
       k += 1
     }
     out.iterator
@@ -329,13 +322,22 @@ object GeoEngine {
    * (a 5°-wide box on the 872² world grid covers ~500 fine tiles but ≤ 8
    * coarse cells; the explode amplification is what dies first at 100 TB).
    *
-   * Three disjoint sub-joins (by the per-object level pair) union to the
-   * full candidate set, each deduped by the reference-point rule at its own
-   * join granularity:
-   *   narrowR ⋈fine narrowS   |  allR ⋈coarse wideS  |  wideR ⋈coarse narrowS
-   * A pair's levels are fixed functions of its MBRs, so it appears in
-   * exactly one sub-join, exactly once. Sub-joins whose wide side is empty
-   * (per `rHasWide`/`sHasWide`) are dropped from the plan entirely.
+   * One explode + one exchange per side over a level-tagged tile key (fine
+   * ids as-is, < 2⁴⁰; coarse ids offset by LvlOffset): narrow rows emit
+   * their fine cover (iff the other side has narrow rows) and their coarse
+   * cover (iff the other side has wide rows); wide rows emit their coarse
+   * cover. Coarse-level both-narrow pairs are dropped (they met at fine)
+   * and the reference-point dedup runs at the pair's own level, so every
+   * pair is produced exactly once. Emissions whose partner population is
+   * empty (per SideMeta) are left out of the plan.
+   *
+   * One candidate generator, two physical filters over the same emission:
+   * the codegen hash join (`mergedJoin`) or, when `sweep` (dense data,
+   * shuffle mode only), one cogroup per tile key running `sweepTile`. A
+   * cogroup never spans levels: every key value encodes exactly one grid
+   * level, and the level is a function of the key alone (coarse iff
+   * ≥ LvlOffset, fine ids being < globalPpd² ≪ 2⁴⁰), so each group holds
+   * rows of one level and the sweep applies that level's rules.
    *
    * Output columns: rid, sid, rg, sg, r/s MBRs (+ caller payload columns in
    * broadcast mode). In slim (shuffle) mode only ids+gtype+MBRs cross the
@@ -345,133 +347,48 @@ object GeoEngine {
       broadcastS: Boolean, saltFactor: Int, maxFineCover: Int,
       rm: SideMeta, sm: SideMeta,
       payload: String => Seq[Column],
-      sweepFine: Boolean = false,
-      sweepCoarse: Boolean = false): DataFrame = {
-    val rHasWide = rm.hasWide; val sHasWide = sm.hasWide
+      sweep: Boolean = false): DataFrame = {
     val slim = !broadcastS
     val wide = fineCoverCnt(grid) > maxFineCover
-
-    def side(df: DataFrame, p: String, idName: String, fine: Boolean,
-             sel: Int /* -1 narrow, 0 all, 1 wide */): DataFrame = {
-      val filtered = sel match {
-        case -1 => df.where(!wide)
-        case 1  => df.where(wide)
-        case _  => df
-      }
-      val exploded =
-        if (fine) explodeCover(filtered, grid.fineExtX, grid.fineExtY,
-          grid.xMin, grid.yMin, grid.globalPpd)
-        else explodeCover(filtered, grid.coarseExtX, grid.coarseExtY,
-          grid.xMin, grid.yMin, grid.coarsePpd)
-      val base = Seq(col("tile"), col("id").as(idName), col("gtype").as(p + "g"),
-        col("xmin").as(p + "xmin"), col("ymin").as(p + "ymin"),
-        col("xmax").as(p + "xmax"), col("ymax").as(p + "ymax"))
-      exploded.select((if (slim) base else base ++ payload(p)): _*)
-    }
-
-    val mbrOverlap =
-      col("rxmax") >= col("sxmin") && col("rxmin") <= col("sxmax") &&
-      col("rymax") >= col("symin") && col("rymin") <= col("symax")
-
-    // hot-tile salting (shuffle joins only): probe side takes a stable salt
-    // from its id, build side replicates saltFactor ways. AQE skew-split
-    // handles the moderate case; explicit salting is for the 10^12-row
-    // hot-spot regime.
-    def subJoin(rt0: DataFrame, st0: DataFrame,
-                extX: Double, extY: Double, ppd: Int): DataFrame = {
-      val salted = saltFactor > 1 && !broadcastS
-      val rt = if (salted)
-        rt0.withColumn("salt", pmod(hash(col("rid")), lit(saltFactor))) else rt0
-      val st1 = if (salted)
-        st0.withColumn("salt", explode(sequence(lit(0), lit(saltFactor - 1))))
-      else st0
-      val st = if (broadcastS) broadcast(st1) else st1
-      val keys = if (salted) Seq("tile", "salt") else Seq("tile")
-      // reference-point dedup at this join's granularity: the pair is kept
-      // only in the cell owning the MBR intersection's min corner
-      val refI = clampIdx(greatest(col("rxmin"), col("sxmin")), extX, grid.xMin, ppd)
-      val refJ = clampIdx(greatest(col("rymin"), col("symin")), extY, grid.yMin, ppd)
-      val dedup = (refI + refJ * lit(ppd.toLong)) === col("tile")
-      rt.join(st, keys).where(mbrOverlap && dedup).drop("tile", "salt")
-    }
-
-    // dense-cell physical path: cogroup per tile + forward plane sweep, at
-    // either grid level (fine for narrow×narrow, coarse for the wide
-    // sub-joins — a pile-up of wide objects in one coarse cell would cost
-    // the hash filter O(k²) there exactly as a hot fine tile would)
-    def cogroupSweep(selR: Int, selS: Int, fine: Boolean): DataFrame = {
+    val bothNarrow = rm.hasNarrow && sm.hasNarrow
+    val rt = mrEmission(rIx, "r", "rid",
+      emitF = bothNarrow,
+      emitCNarrow = rm.hasNarrow && sm.hasWide,
+      emitCWide = rm.hasWide,
+      wide, grid, slim, payload)
+    val st = mrEmission(sIx, "s", "sid",
+      emitF = bothNarrow,
+      emitCNarrow = sm.hasNarrow && rm.hasWide,
+      emitCWide = sm.hasWide,
+      wide, grid, slim, payload)
+    if (sweep && slim) {
       val spark = rIx.sparkSession
       import spark.implicits._
-      val (extX, extY, ppd) =
-        if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd)
-        else (grid.coarseExtX, grid.coarseExtY, grid.coarsePpd)
-      def sweepSide(df: DataFrame, sel: Int): Dataset[SweepRow] = {
-        val filtered = sel match {
-          case -1 => df.where(!wide)
-          case 1  => df.where(wide)
-          case _  => df
-        }
-        explodeCover(filtered, extX, extY, grid.xMin, grid.yMin, ppd)
-          .select(col("tile"), col("id"), col("gtype").as("g"),
-            col("xmin"), col("ymin"), col("xmax"), col("ymax"))
-          .as[SweepRow]
-      }
-      sweepSide(rIx, selR).groupByKey(_.tile)
-        .cogroup(sweepSide(sIx, selS).groupByKey(_.tile)) { (tile, rs, ss) =>
-          sweepTile(grid, tile, rs, ss, fine)
+      def rows(t: DataFrame): Dataset[SweepRow] =
+        t.toDF("tile", "id", "g", "xmin", "ymin", "xmax", "ymax").as[SweepRow]
+      rows(rt).groupByKey(_.tile)
+        .cogroup(rows(st).groupByKey(_.tile)) { (tile, rs, ss) =>
+          sweepTile(grid, maxFineCover, tile, rs, ss)
         }.toDF()
-    }
-    def fineJoin =
-      if (sweepFine && slim) cogroupSweep(-1, -1, fine = true)
-      else subJoin(
-        side(rIx, "r", "rid", fine = true, -1),
-        side(sIx, "s", "sid", fine = true, -1),
-        grid.fineExtX, grid.fineExtY, grid.globalPpd)
-    def coarseJoin(selR: Int, selS: Int) =
-      if (sweepCoarse && slim) cogroupSweep(selR, selS, fine = false)
-      else subJoin(
-        side(rIx, "r", "rid", fine = false, selR),
-        side(sIx, "s", "sid", fine = false, selS),
-        grid.coarseExtX, grid.coarseExtY, grid.coarsePpd)
-    if ((sweepFine || sweepCoarse) && slim) {
-      // dense-data dispatch keeps the three-sub-join structure (the sweep
-      // replaces individual sub-joins; levels cannot share one cogroup)
-      val parts = Seq(
-        if (rm.hasNarrow && sm.hasNarrow) Some(fineJoin) else None,
-        if (sHasWide) Some(coarseJoin(0, 1)) else None,
-        if (rHasWide && sm.hasNarrow) Some(coarseJoin(1, -1)) else None
-      ).flatten
-      (if (parts.nonEmpty) parts else Seq(fineJoin)).reduce(_ unionByName _)
-    } else {
-      // ---- merged multi-resolution exchange (round 6, guide §2.4) ----
-      // The three disjoint sub-joins cost 2-3 scans+explodes and one
-      // exchange PER SIDE PER SUB-JOIN (up to 6 exchanges + 3 joins). A
-      // level-encoded tile key — fine ids as-is (< 2⁴⁰), coarse ids offset
-      // by LvlOffset — produces the IDENTICAL candidate set from one
-      // explode + one exchange per side and one join:
-      //   narrow rows emit their fine cover (iff the other side has narrow
-      //   rows) and their coarse cover (iff the other side has wide rows —
-      //   narrow×narrow pairs join at fine only); wide rows emit their
-      //   coarse cover. The post-join level filter drops coarse-level
-      //   both-narrow pairs (they already joined at fine), and the
-      //   reference-point dedup runs at the pair's own level, exactly as
-      //   the per-sub-join rule did. Total exploded rows are ≤ the old
-      //   sub-joins' (wide rows previously exploded at coarse twice).
-      mergedJoin(
-        mrEmission(rIx, "r", "rid",
-          emitF = rm.hasNarrow && sm.hasNarrow,
-          emitCNarrow = rm.hasNarrow && sm.hasWide,
-          emitCWide = rm.hasWide,
-          wide, grid, slim, payload),
-        mrEmission(sIx, "s", "sid",
-          emitF = rm.hasNarrow && sm.hasNarrow,
-          emitCNarrow = sm.hasNarrow && rm.hasWide,
-          emitCWide = sm.hasWide,
-          wide, grid, slim, payload),
-        grid, broadcastS, saltFactor, maxFineCover,
+    } else
+      mergedJoin(rt, st, grid, broadcastS, saltFactor, maxFineCover,
         levelFilter = true)
-    }
   }
+
+  /** Density dispatch shared by spatialJoin and findRelationJoin: sweep when
+    * the hottest fine tile holds more than `hotTileThreshold` objects, or
+    * when a wide side exists and the hottest coarse cell does (the fine
+    * histogram cannot see wide objects — they never emit fine tiles). An
+    * explicit `sweep` flag overrides. The default threshold is the measured
+    * crossover on this hardware (ScaleBench hot-tile micro-bench: 8k-object
+    * tile ≈ break-even, 30k-object tile sweep wins >2×; O(k²) vs
+    * O(k·window) diverges fast past it). */
+  private def chooseSweep(sweep: Option[Boolean], rm: SideMeta, sm: SideMeta,
+      hotTileThreshold: Long): Boolean =
+    sweep.getOrElse(
+      math.max(rm.maxHomeTileCnt, sm.maxHomeTileCnt) > hotTileThreshold ||
+        (rm.hasWide || sm.hasWide) &&
+          math.max(rm.maxCoarseCellCnt, sm.maxCoarseCellCnt) > hotTileThreshold)
 
   /** Level tag offset for the merged multi-resolution exchange: fine tile
     * ids are < globalPpd² (≤ 872² here), coarse ids get this offset — one
@@ -488,18 +405,22 @@ object GeoEngine {
     val jMin = clampIdx(col("ymin"), extY, grid.yMin, ppd)
     val jMax = clampIdx(col("ymax"), extY, grid.yMin, ppd)
     val pl = lit(ppd.toLong)
-    val o = lit(off)
+    // fine ids carry no offset term (no `+ 0` in the generated code)
+    def cell(i: Column, j: Column): Column =
+      if (off == 0L) i + j * pl else i + j * pl + lit(off)
     val cover = flatten(transform(sequence(jMin, jMax),
-      j => transform(sequence(iMin, iMax), i => i + j * pl + o)))
-    val single = array(iMin + jMin * pl + o)
+      j => transform(sequence(iMin, iMax), i => cell(i, j))))
+    val single = array(cell(iMin, jMin))
     when(col("gtype") === GeomType.POINT, single).otherwise(cover)
   }
 
-  /** One side's single-pass multi-level emission for the merged exchange. */
-  private def mrEmission(df: DataFrame, p: String, idName: String,
-      emitF: Boolean, emitCNarrow: Boolean, emitCWide: Boolean,
-      wide: Column, grid: GridConfig, slim: Boolean,
-      payload: String => Seq[Column]): DataFrame = {
+  /** Level-tagged tile array of one row: its fine cover when narrow and
+    * `emitF`, then its coarse cover when narrow and `emitCNarrow` or wide
+    * and `emitCWide`. Nothing emitted (degenerate empty-side metadata) is an
+    * empty array: it explodes to zero rows, the schema still materializes
+    * and the join is empty. */
+  private def lvlTiles(grid: GridConfig, wide: Column, emitF: Boolean,
+      emitCNarrow: Boolean, emitCWide: Boolean): Column = {
     val emptyA = typedlit(Array.empty[Long])
     val cCond = (emitCNarrow, emitCWide) match {
       case (true, true)  => Some(lit(true))
@@ -507,18 +428,23 @@ object GeoEngine {
       case (false, true) => Some(wide)
       case _             => None
     }
-    val arrs = Seq(
+    Seq(
       if (emitF) Some(when(!wide, lvlCoverArr(grid, fine = true)).otherwise(emptyA))
       else None,
       cCond.map(c => when(c, lvlCoverArr(grid, fine = false)).otherwise(emptyA))
-    ).flatten
-    // no emission (degenerate empty-side metadata): empty array explodes to
-    // zero rows — schema still materializes, join is empty
-    val tiles = arrs.reduceOption(concat(_, _)).getOrElse(emptyA)
+    ).flatten.reduceOption(concat(_, _)).getOrElse(emptyA)
+  }
+
+  /** One side's single-pass multi-level emission for the merged exchange. */
+  private def mrEmission(df: DataFrame, p: String, idName: String,
+      emitF: Boolean, emitCNarrow: Boolean, emitCWide: Boolean,
+      wide: Column, grid: GridConfig, slim: Boolean,
+      payload: String => Seq[Column]): DataFrame = {
     val base = Seq(col("tile"), col("id").as(idName), col("gtype").as(p + "g"),
       col("xmin").as(p + "xmin"), col("ymin").as(p + "ymin"),
       col("xmax").as(p + "xmax"), col("ymax").as(p + "ymax"))
-    df.withColumn("tile", explode(tiles))
+    df.withColumn("tile",
+        explode(lvlTiles(grid, wide, emitF, emitCNarrow, emitCWide)))
       .select((if (slim) base else base ++ payload(p)): _*)
   }
 
@@ -578,9 +504,10 @@ object GeoEngine {
    * the OUTER side's cell cover finds every containment pair exactly once:
    * the inner side (at 10¹² rows, usually the probe) ships ONE row per
    * object through the shuffle — explode factor 1.0 — and no reference-point
-   * dedup is needed. Two disjoint sub-joins by the outer object's level
-   * (narrow: fine grid; wide: coarse grid), like mrCandidates. Pairs failing
-   * closed MBR containment drop before the exact predicate.
+   * dedup is needed. The outer object's level (narrow: fine grid; wide:
+   * coarse grid) picks the pairing cell, over the same level-tagged key as
+   * mrCandidates. Pairs failing closed MBR containment drop before the exact
+   * predicate.
    */
   private def containmentCandidates(rIx: DataFrame, sIx: DataFrame,
       grid: GridConfig, broadcastS: Boolean, saltFactor: Int,
@@ -600,11 +527,11 @@ object GeoEngine {
 
     // merged level-encoded exchange (round 6, guide §2.4 — same key scheme
     // as mrCandidates): the inner side emits its home cell at each level
-    // the outer population needs (≤ 2 rows per object instead of one
-    // exploded table per sub-join); the outer side emits narrow rows' fine
-    // cover and wide rows' coarse cover. The key's level tag guarantees a
-    // containment pair joins exactly once, at the outer object's own level
-    // — no post-join level filter and no reference-point dedup needed.
+    // the outer population needs (≤ 2 rows per object); the outer side
+    // emits narrow rows' fine cover and wide rows' coarse cover. The key's
+    // level tag guarantees a containment pair joins exactly once, at the
+    // outer object's own level — no post-join level filter and no
+    // reference-point dedup needed.
     def homeCell(fine: Boolean): Column = {
       val (extX, extY, ppd, off) =
         if (fine) (grid.fineExtX, grid.fineExtY, grid.globalPpd, 0L)
@@ -612,7 +539,6 @@ object GeoEngine {
       clampIdx(col("xmin"), extX, grid.xMin, ppd) +
         clampIdx(col("ymin"), extY, grid.yMin, ppd) * lit(ppd.toLong) + lit(off)
     }
-    val emptyA = typedlit(Array.empty[Long])
     def sel(df: DataFrame, p: String, idName: String): DataFrame = {
       val base = Seq(col("tile"), col("id").as(idName), col("gtype").as(p + "g"),
         col("xmin").as(p + "xmin"), col("ymin").as(p + "ymin"),
@@ -629,14 +555,8 @@ object GeoEngine {
         explode(array(homeCell(fine = true), homeCell(fine = false))))
       case _ => inner.withColumn("tile", homeCell(fine = true)) // degenerate
     }
-    val outerTiles = Seq(
-      if (outerHasNarrow)
-        Some(when(!wide, lvlCoverArr(grid, fine = true)).otherwise(emptyA))
-      else None,
-      if (outerHasWide)
-        Some(when(wide, lvlCoverArr(grid, fine = false)).otherwise(emptyA))
-      else None
-    ).flatten.reduceOption(concat(_, _)).getOrElse(emptyA)
+    val outerTiles = lvlTiles(grid, wide, emitF = outerHasNarrow,
+      emitCNarrow = false, emitCWide = outerHasWide)
     val it = sel(innerTiled, innerP, innerId)
     val ot = sel(outer.withColumn("tile", explode(outerTiles)), outerP, outerId)
     val (rt, st) = if (innerIsR) (it, ot) else (ot, it)
@@ -890,23 +810,6 @@ object GeoEngine {
     val sm = sMeta.getOrElse(sideStats(sIx, grid, maxFineCover, needDensity))
     val anyNonRect = rm.hasNonRect || sm.hasNonRect
 
-    // Density-driven sweep selection (the reference always sweeps,
-    // intersection_join_filter.cpp:363-489; here the codegen hash path wins
-    // at ordinary density, so the sweep engages only when the dispatch
-    // prepass proves a hot tile): explicit Some(flag) overrides. The default
-    // threshold is the measured crossover on this hardware (ScaleBench
-    // hot-tile micro-bench: 8k-object tile ≈ break-even, 30k-object tile
-    // sweep wins >2×; O(k²) vs O(k·window) diverges fast past it).
-    val sweepFine = sweep.getOrElse(
-      slim && math.max(rm.maxHomeTileCnt, sm.maxHomeTileCnt) > hotTileThreshold)
-    // coarse sub-joins have the same O(k²) failure mode when wide objects
-    // pile into one coarse cell; keyed off the coarse-cell histogram (the
-    // fine histogram cannot see wide objects — they never enter the fine
-    // join). Only consulted when a coarse sub-join will actually exist.
-    val sweepCoarse = sweep.getOrElse(
-      slim && (rm.hasWide || sm.hasWide) &&
-        math.max(rm.maxCoarseCellCnt, sm.maxCoarseCellCnt) > hotTileThreshold)
-
     // containment predicates take the home-cell candidate plan (probe side
     // ships one row per object; no dedup); everything else multi-res tiles
     val contRinS = pred == Predicates.INSIDE || pred == Predicates.COVERED_BY
@@ -921,8 +824,13 @@ object GeoEngine {
           innerIsR = contRinS)
       else mrCandidates(rIx, sIx, grid, broadcastS, saltFactor,
         maxFineCover, rm, sm,
-        if (slim) _ => Nil else payloadCols, sweepFine = sweepFine && slim,
-        sweepCoarse = sweepCoarse && slim)
+        if (slim) _ => Nil else payloadCols,
+        // density-driven sweep selection (the reference always sweeps,
+        // intersection_join_filter.cpp:363-489; here the codegen hash path
+        // wins at ordinary density, so the sweep engages only when the
+        // dispatch prepass proves a hot tile or cell); broadcast joins
+        // never sweep
+        sweep = chooseSweep(sweep, rm, sm, hotTileThreshold))
 
     def refineExpr: Column =
       GeoExprs.stRefine(pred, col("rg"), col("rc"), col("sg"), col("sc"))
@@ -1036,13 +944,9 @@ object GeoEngine {
     val rIxDf = ix(rRaw, rAllPoints)
     val sIxDf = ix(sRaw, sAllPoints)
     // density-driven sweep selection, same rule as spatialJoin's slim path
-    val sweepFine = sweep.getOrElse(
-      math.max(rm.maxHomeTileCnt, sm.maxHomeTileCnt) > hotTileThreshold)
-    val sweepCoarse = sweep.getOrElse((rm.hasWide || sm.hasWide) &&
-      math.max(rm.maxCoarseCellCnt, sm.maxCoarseCellCnt) > hotTileThreshold)
     val cands = mrCandidates(rIxDf, sIxDf, grid, broadcastS = false,
       saltFactor, maxFineCover, rm, sm, _ => Nil,
-      sweepFine = sweepFine, sweepCoarse = sweepCoarse)
+      sweep = chooseSweep(sweep, rm, sm, hotTileThreshold))
     // geometry attach: an all-point side's coords ARE its MBR corner, already
     // on the candidate row — no re-join
     def attachGeom(c: DataFrame, df: DataFrame, p: String, idName: String,
@@ -1207,10 +1111,7 @@ object GeoEngine {
     // rows (not up to globalPpd² driver-built fine tiles), and a wide data
     // polygon ships O(coarse cells) shuffle copies. Level pairing mirrors
     // mrCandidates: (narrow, narrow) joins fine; any pair with a wide
-    // member joins coarse — three disjoint sub-joins, each deduped by the
-    // reference point at its own granularity.
-    // each window rasterizes ONCE even when it feeds two sub-joins (a wide
-    // data side re-broadcasts ALL windows at the coarse level)
+    // member joins coarse, deduped by the reference point at that level.
     val qApprox: Map[Long, (Array[Long], Array[Long])] =
       if (!useApril) Map.empty
       else queries.map { case (qid, g) =>
@@ -1269,22 +1170,10 @@ object GeoEngine {
     if (queries.isEmpty || (!dm.hasNarrow && !dm.hasWide))
       return spark.emptyDataFrame
         .select(lit(0L).as("qid"), lit(0L).as("id")).limit(0)
-    val emptyA = typedlit(Array.empty[Long])
-    val dataTiles = Seq(
-      if (dm.hasNarrow && narrowQ.nonEmpty)
-        Some(when(!wide, lvlCoverArr(grid, fine = true)).otherwise(emptyA))
-      else None,
-      {
-        // coarse emission: narrow data pairs wide windows; wide data pairs all
-        val cond = (dm.hasNarrow && wideQ.nonEmpty, dm.hasWide) match {
-          case (true, true)  => Some(lit(true))
-          case (true, false) => Some(!wide)
-          case (false, true) => Some(wide)
-          case _             => None
-        }
-        cond.map(c => when(c, lvlCoverArr(grid, fine = false)).otherwise(emptyA))
-      }
-    ).flatten.reduceOption(concat(_, _)).getOrElse(emptyA)
+    // coarse emission: narrow data pairs wide windows; wide data pairs all
+    val dataTiles = lvlTiles(grid, wide,
+      emitF = dm.hasNarrow && narrowQ.nonEmpty,
+      emitCNarrow = dm.hasNarrow && wideQ.nonEmpty, emitCWide = dm.hasWide)
     val dt = dIx.withColumn("tile", explode(dataTiles))
     val isCoarse = col("tile") >= lit(LvlOffset)
     // compact codegen kernels instead of inline clampIdx/CASE chains — same

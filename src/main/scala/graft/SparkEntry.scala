@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, SparkSession, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.ops.{TextOps, Ann, Multimodal}
@@ -94,16 +94,31 @@ object SparkEntry {
       |  (s_suppkey * 23 % 1700) / 10.0 - 85.0 AS y
       |FROM supplier""".stripMargin
 
-  private def partBoxes(s: SparkSession, dir: String): DataFrame = {
-    val cx = (col("p_partkey") * 13 % 2800) / 8.0 - 175.0
-    val cy = (col("p_partkey") * 17 % 1280) / 8.0 - 80.0
-    val hw = (col("p_partkey") % 40 + 2) / 8.0
-    val hh = (col("p_partkey") % 30 + 2) / 8.0
-    s.read.parquet(s"$dir/part.parquet").select(
-      col("p_partkey").as("id"),
-      (cx - hw).as("bxmin"), (cy - hh).as("bymin"),
-      (cx + hw).as("bxmax"), (cy + hh).as("bymax"))
+  /** The box formula every derived box table shares: centre
+    * ((k·mx % 2800)/8 − 175, (k·my % 1280)/8 − 80), half-extents
+    * ((k % wMod + wAdd)/div, (k % hMod + hAdd)/div) over key column `key` of
+    * `table`, selected as `id` plus `<p>xmin … <p>ymax`. `shiftEast`
+    * translates the box east by its own width (its west edge is the
+    * unshifted box's east edge). Each `*Sql` twin spells the same formula
+    * out for the oracle. */
+  private def keyBoxes(s: SparkSession, dir: String, table: String, key: String,
+                       id: Column, p: String, mx: Int, my: Int,
+                       wMod: Int, wAdd: Int, hMod: Int, hAdd: Int, div: Double,
+                       shiftEast: Boolean = false): DataFrame = {
+    val k = col(key)
+    val cx = (k * mx % 2800) / 8.0 - 175.0
+    val cy = (k * my % 1280) / 8.0 - 80.0
+    val hw = (k % wMod + wAdd) / div
+    val hh = (k % hMod + hAdd) / div
+    val (x0, x1) = if (shiftEast) (cx + hw, (cx + hw) + (hw + hw)) else (cx - hw, cx + hw)
+    s.read.parquet(s"$dir/$table.parquet").select(id,
+      x0.as(p + "xmin"), (cy - hh).as(p + "ymin"),
+      x1.as(p + "xmax"), (cy + hh).as(p + "ymax"))
   }
+
+  private def partBoxes(s: SparkSession, dir: String): DataFrame =
+    keyBoxes(s, dir, "part", "p_partkey", col("p_partkey").as("id"), "b",
+      13, 17, 40, 2, 30, 2, 8.0)
 
   private val partBoxesSql =
     """SELECT p_partkey AS id,
@@ -113,16 +128,9 @@ object SparkEntry {
       |  ((p_partkey * 17 % 1280) / 8.0 - 80.0)  + ((p_partkey % 30 + 2) / 8.0) AS bymax
       |FROM part""".stripMargin
 
-  private def nationWindows(s: SparkSession, dir: String): DataFrame = {
-    val cx = (col("n_nationkey") * 29 % 2800) / 8.0 - 175.0
-    val cy = (col("n_nationkey") * 31 % 1280) / 8.0 - 80.0
-    val hw = (col("n_nationkey") % 6 + 15) / 8.0
-    val hh = (col("n_nationkey") % 4 + 12) / 8.0
-    s.read.parquet(s"$dir/nation.parquet").select(
-      col("n_nationkey").cast("long").as("qid"),
-      (cx - hw).as("wxmin"), (cy - hh).as("wymin"),
-      (cx + hw).as("wxmax"), (cy + hh).as("wymax"))
-  }
+  private def nationWindows(s: SparkSession, dir: String): DataFrame =
+    keyBoxes(s, dir, "nation", "n_nationkey",
+      col("n_nationkey").cast("long").as("qid"), "w", 29, 31, 6, 15, 4, 12, 8.0)
 
   private val nationWindowsSql =
     """SELECT CAST(n_nationkey AS BIGINT) AS qid,
@@ -135,16 +143,9 @@ object SparkEntry {
   /** Customer boxes on the same formula as part boxes → keys present in both
     * tables yield exactly equal boxes (EQUAL-join coverage); plus formula
     * collisions. */
-  private def custBoxes(s: SparkSession, dir: String): DataFrame = {
-    val cx = (col("c_custkey") * 13 % 2800) / 8.0 - 175.0
-    val cy = (col("c_custkey") * 17 % 1280) / 8.0 - 80.0
-    val hw = (col("c_custkey") % 40 + 2) / 8.0
-    val hh = (col("c_custkey") % 30 + 2) / 8.0
-    s.read.parquet(s"$dir/customer.parquet").select(
-      col("c_custkey").as("id"),
-      (cx - hw).as("bxmin"), (cy - hh).as("bymin"),
-      (cx + hw).as("bxmax"), (cy + hh).as("bymax"))
-  }
+  private def custBoxes(s: SparkSession, dir: String): DataFrame =
+    keyBoxes(s, dir, "customer", "c_custkey", col("c_custkey").as("id"), "b",
+      13, 17, 40, 2, 30, 2, 8.0)
 
   private val custBoxesSql =
     """SELECT c_custkey AS id,
@@ -155,16 +156,9 @@ object SparkEntry {
       |FROM customer""".stripMargin
 
   /** Small boxes (1/16° dyadic lattice) from customer — the INSIDE-join probe side. */
-  private def smallBoxes(s: SparkSession, dir: String): DataFrame = {
-    val cx = (col("c_custkey") * 13 % 2800) / 8.0 - 175.0
-    val cy = (col("c_custkey") * 17 % 1280) / 8.0 - 80.0
-    val hw = (col("c_custkey") % 10 + 1) / 16.0
-    val hh = (col("c_custkey") % 8 + 1) / 16.0
-    s.read.parquet(s"$dir/customer.parquet").select(
-      col("c_custkey").as("id"),
-      (cx - hw).as("bxmin"), (cy - hh).as("bymin"),
-      (cx + hw).as("bxmax"), (cy + hh).as("bymax"))
-  }
+  private def smallBoxes(s: SparkSession, dir: String): DataFrame =
+    keyBoxes(s, dir, "customer", "c_custkey", col("c_custkey").as("id"), "b",
+      13, 17, 10, 1, 8, 1, 16.0)
 
   private val smallBoxesSql =
     """SELECT c_custkey AS id,
@@ -176,16 +170,9 @@ object SparkEntry {
 
   /** Part boxes translated east by their own width: each shares its west edge
     * with the original (MEET-join coverage). */
-  private def shiftedBoxes(s: SparkSession, dir: String): DataFrame = {
-    val cx = (col("p_partkey") * 13 % 2800) / 8.0 - 175.0
-    val cy = (col("p_partkey") * 17 % 1280) / 8.0 - 80.0
-    val hw = (col("p_partkey") % 40 + 2) / 8.0
-    val hh = (col("p_partkey") % 30 + 2) / 8.0
-    s.read.parquet(s"$dir/part.parquet").select(
-      col("p_partkey").as("id"),
-      (cx + hw).as("bxmin"), (cy - hh).as("bymin"),
-      ((cx + hw) + (hw + hw)).as("bxmax"), (cy + hh).as("bymax"))
-  }
+  private def shiftedBoxes(s: SparkSession, dir: String): DataFrame =
+    keyBoxes(s, dir, "part", "p_partkey", col("p_partkey").as("id"), "b",
+      13, 17, 40, 2, 30, 2, 8.0, shiftEast = true)
 
   private val shiftedBoxesSql =
     """SELECT p_partkey AS id,

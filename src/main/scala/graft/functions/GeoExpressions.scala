@@ -172,11 +172,13 @@ object GeoKernels {
 
   /** Level-aware reference-cell dedup for the merged multi-resolution
     * exchange: keep the pair only in the cell (at the tile's own level)
-    * owning the MBR intersection's min corner. One static call replacing a
-    * ~1.2 KB inline chain of 4 clampIdx expressions + a CASE — the merged
-    * join's doConsume method was 8.5 KB of bytecode, just past the JVM's
-    * 8000-byte JIT ceiling (DontCompileHugeMethods), so the hottest join
-    * stage ran INTERPRETED (measured 2.5× on q_find_relation_april). */
+    * owning the MBR intersection's min corner. Shared by the hash join
+    * (through MergedRefDedup) and the dense-tile sweep (GeoEngine.sweepTile),
+    * so both filters apply one rule. One static call replacing a ~1.2 KB
+    * inline chain of 4 clampIdx expressions + a CASE — the merged join's
+    * doConsume method was 8.5 KB of bytecode, just past the JVM's 8000-byte
+    * JIT ceiling (DontCompileHugeMethods), so the hottest join stage ran
+    * INTERPRETED (measured 2.5× on q_find_relation_april). */
   def refCellDedup(tile: Long, axmin: Double, aymin: Double,
                    bxmin: Double, bymin: Double,
                    xMin: Double, yMin: Double,
@@ -194,7 +196,7 @@ object GeoKernels {
   }
 
   /** Fine-grid cover count of an MBR — scalar twin of
-    * GeoEngine.fineCoverCntP (same clamped-floor arithmetic), for the merged
+    * GeoEngine.fineCoverCnt (same clamped-floor arithmetic), for the merged
     * join's both-narrow level filter. Same JIT-ceiling motivation as
     * refCellDedup: 4 more inline clampIdx chains per side collapse to one
     * call. */
@@ -533,12 +535,14 @@ case class KnnTiles(x: Expression, y: Expression, k: Int,
 }
 
 /** Merged-exchange reference-cell dedup as ONE compact codegen call.
-  * Semantics identical to the inline Column chain it replaces
-  * (`when(tile >= LvlOffset, coarseRefCell === tile).otherwise(fineRefCell
-  * === tile)` over clampIdx chains); the point is BYTECODE SIZE: the inline
-  * form pushed the merged join's generated doConsume past the JVM's
-  * 8000-byte JIT ceiling, de-optimizing the whole stage to interpreted
-  * bytecode (guide §4 — keep the hot path in compiled codegen). */
+  * Bit-identical for finite non-null inputs to the inline Column chain it
+  * replaces (`when(tile >= LvlOffset, coarseRefCell === tile)
+  * .otherwise(fineRefCell === tile)` over clampIdx chains); on NaN or null
+  * coordinates the two can differ (Spark's `greatest` ranks NaN highest and
+  * skips nulls; the kernel is null-rejecting). The point is BYTECODE SIZE:
+  * the inline form pushed the merged join's generated doConsume past the
+  * JVM's 8000-byte JIT ceiling, de-optimizing the whole stage to
+  * interpreted bytecode (guide §4 — keep the hot path in compiled codegen). */
 case class MergedRefDedup(tile: Expression, axmin: Expression, aymin: Expression,
                           bxmin: Expression, bymin: Expression,
                           xMin: Double, yMin: Double,

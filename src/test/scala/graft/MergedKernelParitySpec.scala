@@ -11,7 +11,8 @@ import graft.web.Pages
  * The compact codegen kernels that replaced the merged-exchange join
  * condition's inline Column chains (round 6: the chains pushed the generated
  * doConsume past the JVM's 8000-byte JIT ceiling) must be BIT-IDENTICAL to
- * those chains: merged_ref_dedup vs the when(isCoarse,...) clampIdx formula,
+ * those chains for finite non-null inputs (the only inputs the fixture and
+ * the join paths, behind their MBR-overlap test, feed them): merged_ref_dedup vs the when(isCoarse,...) clampIdx formula,
  * fine_cover_cnt vs the 4-clampIdx product. Randomized MBR pairs plus the
  * exact level-encoded tiles both formulas route on, including off-grid MBRs
  * (clamping) and degenerate point MBRs.
@@ -87,7 +88,7 @@ class MergedKernelParitySpec extends AnyFunSuite {
       "bxmin", "bymin", "bxmax", "bymax")
   }
 
-  test("merged_ref_dedup is bit-identical to the inline clampIdx/CASE chain") {
+  test("merged_ref_dedup is bit-identical for finite non-null inputs to the inline clampIdx/CASE chain") {
     val df = fixture.withColumn("new",
         GeoExprs.mergedRefDedup(col("tile"), col("axmin"), col("aymin"),
           col("bxmin"), col("bymin"), grid, LvlOffset))
@@ -99,7 +100,7 @@ class MergedKernelParitySpec extends AnyFunSuite {
     assert(df.where(!col("new")).count() > 0)
   }
 
-  test("fine_cover_cnt is bit-identical to the 4-clampIdx product") {
+  test("fine_cover_cnt is bit-identical for finite non-null inputs to the 4-clampIdx product") {
     val df = fixture.withColumn("new",
         GeoExprs.fineCoverCount(col("axmin"), col("aymin"),
           col("axmax"), col("aymax"), grid))

@@ -6,8 +6,8 @@ import graft.core._
 
 /**
  * Multi-resolution tiling: wide objects (fine cover > maxFineCover) are
- * assigned at the coarse grid, narrow ones at the fine grid, and the three
- * level-pair sub-joins must reproduce the single-level result exactly —
+ * assigned at the coarse grid, narrow ones at the fine grid, and the
+ * level-tagged exchange must reproduce the single-level result exactly —
  * same pairs, exactly once — for every predicate and for find-relation.
  */
 class MultiResSpec extends AnyFunSuite {
@@ -315,6 +315,49 @@ class MultiResSpec extends AnyFunSuite {
     assert(rels(auto) == rels(GeoEngine.findRelationJoin(r, s, grid,
       sweep = Some(false))))
     assert(rels(auto).nonEmpty)
+  }
+
+  test("mixed hot tile + wide pile-up: one cogroup over both levels ≡ hash path") {
+    import spark.implicits._
+    // both sides: mixed-width boxes, a hot FINE tile of tiny boxes and a
+    // pile-up of WIDE boxes in one coarse cell — the forced sweep must cover
+    // fine and coarse keys in the same cogroup
+    def dense(seed: Int) = (0 until 300).map { i =>
+      val k = i * 13 + seed
+      val cx = 10.02 + (k % 97) * 0.003
+      val cy = 20.01 + (k % 89) * 0.002
+      GeoRow((10000 + i).toLong, GeomType.BOX,
+        Array(cx, cy, cx + 0.002, cy, cx + 0.002, cy + 0.002, cx, cy + 0.002, cx, cy),
+        cx, cy, cx + 0.002, cy + 0.002)
+    }
+    // one local table per side (a Dataset union would put a Union in the plan)
+    def side(a: Int, b: Int, c: Int) = (boxes(a, 300).collect().toSeq ++ dense(b) ++
+      wideHotCell(c, 250).collect()).toDS()
+    val r = side(81, 1, 1)
+    val s = side(82, 5, 7)
+    // one candidate generator: a single cogroup spans both levels' keys,
+    // no per-level sub-joins and no union of their outputs (read before
+    // execution — an executed AQE plan prints the initial plan as well)
+    def assertOneCogroup(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert("CoGroup".r.findAllIn(plan).length == 1, plan)
+      assert(!plan.contains("Union"), plan)
+    }
+    for (pred <- Seq(Predicates.INTERSECTS, Predicates.MEET)) {
+      val viaSweep = GeoEngine.spatialJoin(r, s, pred, grid, sweep = Some(true))
+      assertOneCogroup(viaSweep)
+      val got = pairs(viaSweep)
+      val viaHash = pairs(GeoEngine.spatialJoin(r, s, pred, grid,
+        sweep = Some(false)))
+      assert(got == viaHash, s"pred=$pred sweep=${got.size} hash=${viaHash.size}")
+      assert(viaHash.nonEmpty)
+    }
+    def rels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
+    val frSweep = GeoEngine.findRelationJoin(r, s, grid, sweep = Some(true))
+    assertOneCogroup(frSweep)
+    assert(rels(frSweep) ==
+      rels(GeoEngine.findRelationJoin(r, s, grid, sweep = Some(false))))
   }
 
   test("non-nested custom grid: density prepass degrades gracefully") {
